@@ -5,9 +5,14 @@ shuffle partitions sized to parallelism rather than the 200 default.
 
 from __future__ import annotations
 
+import logging
 import os
+import threading
 
 from pyspark.sql import SparkSession
+
+_log = logging.getLogger(__name__)
+_warm_lock = threading.Lock()
 
 
 def _local_dir() -> str:
@@ -27,7 +32,9 @@ def _warm_python_workers(spark: SparkSession) -> None:
     and import numpy/pandas/pyarrow NOW, overlapped (FAIR scheduler) with
     whatever the driver does next — measured ~2.5s of first-Python-job
     wall time at local[32] that otherwise lands inside the first real
-    kernel stage. Failures are irrelevant (the real job warms lazily)."""
+    kernel stage. A failure does not fail the session (the real job warms
+    lazily), but it is logged: a broken daemon module would otherwise
+    fail every later Python job with no early signal."""
 
     def _k(batches):
         import numpy  # noqa: F401
@@ -51,7 +58,11 @@ def _warm_python_workers(spark: SparkSession) -> None:
             .save()
         )
     except Exception:  # noqa: BLE001 — warm-up is best-effort by design
-        pass
+        _log.warning(
+            "python worker warm-up failed; later Python jobs will likely "
+            "fail the same way",
+            exc_info=True,
+        )
 
 
 def ensure_workers_warm(spark: SparkSession) -> None:
@@ -60,15 +71,36 @@ def ensure_workers_warm(spark: SparkSession) -> None:
     Called at session creation (so the fork+import cost overlaps the
     driver-side setup that follows — data loading, plan building) and
     again defensively at index-build entry for sessions constructed
-    elsewhere; the marker makes the second call free."""
-    if getattr(spark, "_ariadna_workers_warmed", False):
-        return
-    spark._ariadna_workers_warmed = True
-    import threading
-
+    elsewhere; the marker makes the second call free. The lock makes the
+    check-then-set atomic, so concurrent callers start one warm-up."""
+    with _warm_lock:
+        if getattr(spark, "_ariadna_workers_warmed", False):
+            return
+        spark._ariadna_workers_warmed = True
     threading.Thread(
         target=_warm_python_workers, args=(spark,), daemon=True
     ).start()
+
+
+def _codecs(cores: int) -> tuple[str, str]:
+    """(parquet, io) compression codecs for a session of `cores` cores.
+
+    A bandwidth-for-CPU trade, bought only when per-core bandwidth is the
+    scarce resource (guide §2.3 "measure both", §6). Measured on a 32-core
+    box, interleaved A/B at 1M docs: parquet snappy 341/317s vs zstd
+    219/221s (artifacts 1082 MB -> 761 MB) and shuffle lz4 286/300s vs
+    zstd 255/230s at local[32], where 32 tasks contend for the memory bus
+    — but at the pinned local[2] ladder rung (CPU-bound, bandwidth idle)
+    zstd builds are ~15% SLOWER (217/248 vs 257/278 at 300k docs). So the
+    default scales with parallelism: heavy codecs from 8 cores up (the
+    cluster-executor regime, where NIC/disk/memory-bus contention is the
+    norm), light ones below. ARIADNA_PARQUET_CODEC / ARIADNA_IO_CODEC
+    override each for A/B; an empty value means the default."""
+    heavy = cores >= 8
+    return (
+        os.environ.get("ARIADNA_PARQUET_CODEC") or ("zstd" if heavy else "snappy"),
+        os.environ.get("ARIADNA_IO_CODEC") or ("zstd" if heavy else "lz4"),
+    )
 
 
 def get_spark(
@@ -87,7 +119,8 @@ def get_spark(
     # Preload numpy/pandas/pyarrow in the python-worker DAEMON so forked
     # workers inherit them copy-on-write (worker_daemon.py): the first
     # Python-boundary job otherwise pays ~2.5s of parallel imports at
-    # local[32]. Local mode: the JVM (and thus the daemon) inherits this
+    # local[32]. The same daemon stops every task from re-parsing
+    # pyspark.zip (~200 ms per task on CPython 3.11). Local mode: the JVM (and thus the daemon) inherits this
     # process's env, so extending PYTHONPATH makes the module importable
     # by the daemon's fresh interpreter; on a cluster ship the module via
     # --py-files instead.
@@ -97,6 +130,7 @@ def get_spark(
         os.environ["PYTHONPATH"] = (
             _repo_root + (os.pathsep + _pp if _pp else "")
         )
+    parquet_codec, io_codec = _codecs(cores)
     builder = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)
@@ -126,27 +160,8 @@ def get_spark(
         # threads); tmpfs restores flat behavior. On a real cluster this is
         # the executors' local NVMe, which is per-node and scales with N.
         .config("spark.local.dir", _local_dir())
-        # Compression codecs: a bandwidth-for-CPU trade, bought only when
-        # per-core bandwidth is the scarce resource (guide §2.3 "measure
-        # both", §6). Measured on this box, interleaved A/B at 1M docs:
-        # parquet snappy 341/317s vs zstd 219/221s (artifacts 1082 MB ->
-        # 761 MB) and shuffle lz4 286/300s vs zstd 255/230s at local[32],
-        # where 32 tasks contend for the memory bus — but at the pinned
-        # local[2] ladder rung (CPU-bound, bandwidth idle) zstd builds are
-        # ~15% SLOWER (217/248 vs 257/278 at 300k docs). So the default
-        # scales with parallelism: heavy codecs from 8 cores up (the
-        # cluster-executor regime, where NIC/disk/memory-bus contention is
-        # the norm), light ones below. Env-overridable for A/B.
-        .config(
-            "spark.sql.parquet.compression.codec",
-            os.environ.get(
-                "ARIADNA_PARQUET_CODEC", "zstd" if cores >= 8 else "snappy"
-            ),
-        )
-        .config(
-            "spark.io.compression.codec",
-            os.environ.get("ARIADNA_IO_CODEC", "zstd" if cores >= 8 else "lz4"),
-        )
+        .config("spark.sql.parquet.compression.codec", parquet_codec)
+        .config("spark.io.compression.codec", io_codec)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

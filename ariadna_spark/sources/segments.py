@@ -652,25 +652,28 @@ def _build_from_tf(
     # cluster while the posting shuffle's tail drains (guide §2.6 — actions
     # are only sequential because driver code calls them sequentially).
     # Each phase keeps its idempotent marker guard, so resume semantics are
-    # unchanged; exceptions are re-raised after every phase settles.
+    # unchanged. Exceptions are raised after every phase settles: a lone
+    # failure as itself, several together as one ExceptionGroup.
     from concurrent.futures import ThreadPoolExecutor
 
     try:
         with ThreadPoolExecutor(max_workers=5) as pool:
             scalars_fut = pool.submit(_scalars)
-            futs = [
+            futs = [scalars_fut] + [
                 pool.submit(f)
                 for f in (_phase_postings, _phase_terms, _phase_ngrams, _phase_docmap)
             ]
             errs = []
             for fut in futs:
-                try:
-                    fut.result()
-                except Exception as e:  # noqa: BLE001 — re-raised below
+                e = fut.exception()
+                # a failed _scalars re-raises in every phase that waits on it
+                if e is not None and not any(e is x for x in errs):
                     errs.append(e)
-            n_docs, avgdl, total_tokens = scalars_fut.result()
-            if errs:
+            if len(errs) == 1:
                 raise errs[0]
+            if errs:
+                raise BaseExceptionGroup(f"{len(errs)} index build phases failed", errs)
+            n_docs, avgdl, total_tokens = scalars_fut.result()
     finally:
         dfreq.unpersist()
 

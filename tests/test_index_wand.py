@@ -145,6 +145,28 @@ def test_resume_after_injected_failure(spark, docs, tmp_path):
     assert [(r["doc_id"], r["score"]) for r in r1] == [(r["doc_id"], r["score"]) for r in r2]
 
 
+def test_build_reports_every_failed_phase(spark, docs, tmp_path, monkeypatch):
+    """Two build phases fail: the error carries both, not just the first."""
+    from ariadna_spark.sources import segments
+
+    write_json = segments._atomic_write_json
+
+    def failing_write(path, obj):
+        name = os.path.basename(path)
+        if name in ("_terms.json", "_ngrams.json"):
+            raise OSError(f"injected failure writing {name}")
+        write_json(path, obj)
+
+    monkeypatch.setattr(segments, "_atomic_write_json", failing_write)
+    with pytest.raises(ExceptionGroup) as ei:
+        build_index(spark, docs.limit(40), str(tmp_path / "seg"), n_buckets=2)
+    msgs = sorted(str(e) for e in ei.value.exceptions)
+    assert msgs == [
+        "injected failure writing _ngrams.json",
+        "injected failure writing _terms.json",
+    ]
+
+
 def test_publish_swap_and_gc(spark, docs, tmp_path):
     out = str(tmp_path / "seg")
     build_index(spark, docs.limit(50), out, build_id="old", n_buckets=2)

@@ -2,6 +2,8 @@
 catalog table, NDJSON, and CSV must produce byte-identical canonical docs
 (content_sha invariant) and identical index results."""
 
+import threading
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -90,24 +92,15 @@ def test_worker_warmup_once_per_session(spark, monkeypatch):
     session: the second call must see the marker and spawn nothing (the
     warm-up moved to session creation in r7 — a per-build re-fire would
     waste a job per micro-batch under streaming ingestion)."""
-    import threading
-
     from ariadna_spark import session as S
 
-    # ensure_workers_warm does `import threading` inside the function, so
-    # patching the module-level Thread intercepts its spawn
-    spawned = []
-
-    class _FakeThread:
-        def __init__(self, *a, **kw):
-            spawned.append(1)
-
-        def start(self):
-            pass
-
-    monkeypatch.setattr(threading, "Thread", _FakeThread)
+    calls = []
+    monkeypatch.setattr(S, "_warm_python_workers", calls.append)
     monkeypatch.setattr(spark, "_ariadna_workers_warmed", False, raising=False)
+    before = set(threading.enumerate())
     S.ensure_workers_warm(spark)
     S.ensure_workers_warm(spark)
-    assert spawned == [1]
+    for t in set(threading.enumerate()) - before:
+        t.join(timeout=5)
+    assert calls == [spark]
     assert spark._ariadna_workers_warmed is True
