@@ -28,12 +28,11 @@ Plan shapes (all built on IndexReader's pruned block machinery):
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..analyze import tokenize_py
-from .wand import RANGE_SIZE_DEFAULT, multiquery_kernel
+from .wand import RANGE_SIZE_DEFAULT
 
 
 def collapse_topk(
@@ -102,33 +101,8 @@ def _clause_scores(
     (the rescore window shape: only blocks overlapping the window's doc
     ranges are decoded)."""
     per_q = {i: sorted(set(tokenize_py(c))) for i, c in enumerate(clauses)}
-    k_by_q = {i: range_size for i in per_q}
-    all_terms = sorted({t for ts in per_q.values() for t in ts})
-    if not all_terms:
-        return None
-    blocks = reader._blocks_for_terms(all_terms)
-    if blocks is None:
-        return None
-    n_docs = reader.stats["N"]
-    avgdl = reader.stats["avgdl"]
-    rid = F.explode(
-        F.sequence(
-            (F.col("first_doc_id") / range_size).cast("long"),
-            (F.col("last_doc_id") / range_size).cast("long"),
-        )
-    ).alias("rid")
-    ranged = blocks.select("*", rid).withColumn("is_tomb", F.lit(False))
-    tomb = reader._tomb_ranged(range_size)
-    if tomb is not None:
-        ranged = ranged.unionByName(tomb, allowMissingColumns=True)
-    if rid_filter is not None:
-        ranged = ranged.filter(F.col("rid").isin([int(r) for r in rid_filter]))
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        return multiquery_kernel(pdf, per_q, k_by_q, n_docs, avgdl, range_size)
-
-    return ranged.groupBy("rid").applyInPandas(
-        kernel, "query_id long, doc_id long, score double"
+    return reader._multiquery_scores(
+        per_q, {i: range_size for i in per_q}, range_size, rids=rid_filter
     )
 
 

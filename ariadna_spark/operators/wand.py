@@ -34,6 +34,7 @@ from __future__ import annotations
 import heapq
 import json
 import os
+from typing import Callable, NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -69,32 +70,175 @@ def _score_block(tf: np.ndarray, dl: np.ndarray, idf: float, avgdl: float) -> np
     return idf * (tf * (K1 + 1.0)) / (tf + K1 * (1.0 - B + B * dl / avgdl))
 
 
-def _bmw_range_topk(
-    sub: np.ndarray,
-    row_term: np.ndarray,
-    fd: np.ndarray,
-    ld: np.ndarray,
-    bms: np.ndarray,
-    decode,
-    k: int,
-    lo: int,
+_TOPK_DTYPES = {"doc_id": "int64", "score": "float64"}
+
+
+def _topk_frame(doc_ids, scores) -> pd.DataFrame:
+    return pd.DataFrame({"doc_id": doc_ids, "score": scores}).astype(_TOPK_DTYPES)
+
+
+def _split_pseudo_rows(
+    pdf: pd.DataFrame, dead_key: tuple[str, ...] = ("bid",)
+) -> tuple[pd.DataFrame, np.ndarray | None, list | None]:
+    """Strip the two pseudo-row families IndexReader._ranged adds to the
+    rid shuffle and return (block_rows, allow, row_dead). `allow` (sorted
+    int64 ids, or None when no filter context) comes from is_filt rows —
+    the ES bool-filter allow-list. is_tomb rows carry the per-segment
+    overwrite tombstones, grouped by `dead_key` columns (the build id; a
+    multifield range also keys by field, since two fields' stores may
+    share build ids); row_dead[i] is the dead doc_ids of block row i's
+    segment (None if it has none), or row_dead is None when the range
+    holds no tombstone."""
+    allow: np.ndarray | None = None
+    if "is_filt" in pdf.columns:
+        fm = pdf["is_filt"].to_numpy().astype(bool)
+        allow = np.sort(pdf.loc[fm, "first_doc_id"].to_numpy().astype(np.int64))
+        pdf = pdf[~fm].reset_index(drop=True)
+    row_dead = None
+    if not pdf.empty and "is_tomb" in pdf.columns:
+        tm = pdf["is_tomb"].to_numpy()
+        if tm.any():
+            cols = list(dead_key)
+            dead = {
+                key: g["first_doc_id"].to_numpy().astype(np.int64)
+                for key, g in pdf[tm].groupby(cols)
+            }
+            pdf = pdf[~tm].reset_index(drop=True)
+            row_dead = [dead.get(key) for key in zip(*(pdf[c].to_numpy() for c in cols))]
+    return pdf, allow, row_dead
+
+
+def _make_decoder(pdf, lo, hi, row_idf, row_avgdl, row_weight, row_dead, allow):
+    """Lazy per-block decode closure: ids masked to [lo, hi), dead
+    versions and filter-context exclusions applied, scores precomputed
+    with the row's idf, avgdl and weight. Memoized — a block decodes at
+    most once per kernel invocation; the memo dict doubles as the decode
+    counter for prune_stats."""
+    decoded: dict[int, tuple[np.ndarray, np.ndarray]] = {}
+
+    def decode(i: int) -> tuple[np.ndarray, np.ndarray]:
+        if i not in decoded:
+            ids = delta_decode_ids(pdf["doc_ids_varint"].iloc[i])
+            tfs = varint_decode(pdf["tfs_varint"].iloc[i]).astype(np.float64)
+            dls = varint_decode(pdf["dls_varint"].iloc[i]).astype(np.float64)
+            sc = _score_block(tfs, dls, row_idf[i], row_avgdl[i]) * row_weight[i]
+            m = (ids >= lo) & (ids < hi)
+            if row_dead is not None and row_dead[i] is not None:
+                m &= ~np.isin(ids, row_dead[i])  # overwritten versions never score
+            if allow is not None:
+                m &= np.isin(ids, allow)  # filter context: allowed docs only
+            decoded[i] = (ids[m], sc[m])
+        return decoded[i]
+
+    return decode, decoded
+
+
+class _Range(NamedTuple):
+    """One rid group's block rows, ready for _bmw_range_topk."""
+
+    lo: int
+    n_strides: int
+    stride: int
+    term: np.ndarray  # per block row
+    key: np.ndarray  # bound accumulation key per row: term, or (field, term) group
+    fd: np.ndarray
+    ld: np.ndarray
+    bms: np.ndarray  # block-max score upper bound per row
+    decode: Callable[[int], tuple[np.ndarray, np.ndarray]]
+    decoded: dict
+    stride_mask: np.ndarray | None  # strides holding an allowed doc
+
+
+def _open_range(
+    pdf: pd.DataFrame,
     range_size: int,
     stride: int,
+    metas: dict[int, tuple[int, float, float]],
+    by_field: bool = False,
+) -> _Range | None:
+    """Shared prologue of the block-max WAND kernels for ONE rid group.
+
+    metas: field -> (n_docs, avgdl, weight). Single-field kernels pass
+    {0: (N, avgdl, 1.0)}; with `by_field` the rows carry a `field` column
+    and every field keeps its OWN statistics (the Lucene per-field
+    model): idf per (field, term) from that field's df and N, bounds
+    accumulated per (field, term) — the same term in two fields scores
+    twice — and tombstones keyed per (field, build). Returns None when
+    the range holds no block or the filter context allows no doc."""
+    rid = int(pdf["rid"].iloc[0])
+    pdf, allow, row_dead = _split_pseudo_rows(pdf, ("field", "bid") if by_field else ("bid",))
+    if pdf.empty or (allow is not None and allow.size == 0):
+        return None
+    lo = rid * range_size
+    row_term = pdf["term"].to_numpy()
+    if by_field:
+        row_field = pdf["field"].to_numpy().astype(np.int64)
+        key = pdf.groupby(["field", "term"], sort=False).ngroup().to_numpy()
+    else:
+        row_field = np.zeros(len(pdf), dtype=np.int64)
+        key = row_term
+    idf_by_field = {
+        f: _idf_map(pdf.loc[row_field == f, ["term", "df"]].drop_duplicates("term"), metas[f][0])
+        for f in np.unique(row_field)
+    }
+    row_idf = np.asarray(
+        [idf_by_field[f][t] for f, t in zip(row_field, row_term)], dtype=np.float64
+    )
+    row_avgdl = np.asarray([metas[f][1] for f in row_field], dtype=np.float64)
+    row_weight = np.asarray([metas[f][2] for f in row_field], dtype=np.float64)
+    # block max score = idf(term) * stored idf-free tfnorm max, scaled by
+    # the per-segment bound correction (1.0 for a single-build index; for
+    # merge-on-read, max(1, avgdl_global/avgdl_segment) keeps the stored
+    # per-build tfnorm max a valid upper bound under the global avgdl)
+    scale = pdf["scale"].to_numpy() if "scale" in pdf.columns else 1.0
+    bms = pdf["block_max_tfnorm"].to_numpy() * row_idf * scale * row_weight
+    decode, decoded = _make_decoder(
+        pdf, lo, lo + range_size, row_idf, row_avgdl, row_weight, row_dead, allow
+    )
+    n_strides = (range_size + stride - 1) // stride
+    stride_mask = None
+    if allow is not None:
+        # strides holding no allowed doc can never produce a candidate:
+        # their bound is zeroed so they are never visited (blocks never decode)
+        stride_mask = np.zeros(n_strides, dtype=bool)
+        stride_mask[np.unique((allow - lo) // stride)] = True
+    return _Range(
+        lo, n_strides, stride, row_term, key,
+        pdf["first_doc_id"].to_numpy(), pdf["last_doc_id"].to_numpy(),
+        bms, decode, decoded, stride_mask,
+    )
+
+
+def _bmw_range_topk(
+    r: _Range,
+    sub: np.ndarray,
+    k: int,
     after: tuple[float, int] | None = None,
-    stride_mask: np.ndarray | None = None,
+    is_must: np.ndarray | None = None,
+    is_not: np.ndarray | None = None,
+    msm: int = 0,
 ) -> tuple[np.ndarray, np.ndarray]:
     """Stride-level block-max WAND over ONE doc_id range, restricted to the
-    posting-block rows indexed by `sub` (the shared core of wand_kernel and
-    multiquery_kernel — the batch path reuses it per query over a SHARED
-    decode cache, so a stop-word block is decoded once for the whole batch
-    while every query still gets its own block-max pruning, ADVICE r3).
+    block rows indexed by `sub` (ascending; the batch kernel runs it per
+    query over ONE shared decode cache, so a stop-word block is decoded
+    once for the whole batch while every query keeps its own block-max
+    pruning).
 
-    `decode(i)` returns the (ids, scores) of global row i, masked to this
-    range and tombstone-filtered; callers memoize it. Strides are visited
-    in descending metadata upper-bound order and the loop stops as soon as
+    r.decode(i) returns the (ids, scores) of row i, masked to this range,
+    tombstone- and filter-masked; it is memoized. Strides are visited in
+    descending metadata upper-bound order and the loop stops as soon as
     UB < the current k-th score (strict <, preserving doc_id tie-break
     rank-identity). Returns (doc_ids, scores) sorted by (-score, doc_id),
     at most k entries.
+
+    ES bool rules (per-row masks over all of r's rows; None = no such
+    clause): a doc qualifies only with EVERY `is_must` term, at least
+    `msm` distinct non-must scoring terms and no `is_not` term. must_not
+    rows never add to bounds or scores; they decode only in visited
+    strides. A stride not covered by >= 1 block of EVERY must term cannot
+    hold a qualifying doc (a doc's posting for each must term lives in a
+    block spanning its id), so its bound is zeroed and its blocks never
+    decode — the dominant win for selective conjunctions.
 
     `after=(score, doc_id)` is the search_after cursor (ES deep-pagination
     semantics): only docs strictly AFTER the cursor in (score desc, doc_id
@@ -102,33 +246,41 @@ def _bmw_range_topk(
     larger doc_id. The cut happens after exact per-stride scoring (a
     stride's bound says nothing about which side of the cursor its docs
     land on), so block-max pruning still only compares against the
-    qualifying top-k threshold and stays sound.
-
-    `stride_mask` (bool, n_strides) zeroes the upper bound of strides a
-    caller has proven empty of eligible docs (e.g. no filter-allowed doc
-    falls inside) — they are never visited, so their blocks never decode.
-    """
-    n_strides = (range_size + stride - 1) // stride
-    sub_fd, sub_ld = fd[sub], ld[sub]
-    sub_term = row_term[sub]
+    qualifying top-k threshold and stays sound."""
+    n_strides, stride, lo = r.n_strides, r.stride, r.lo
+    sub_fd, sub_ld, sub_key = r.fd[sub], r.ld[sub], r.key[sub]
     s_lo = np.maximum((sub_fd - lo) // stride, 0)
     s_hi = np.minimum((sub_ld - lo) // stride, n_strides - 1)
+
+    def spans(key):
+        """(sub position, stride slice) of every row of `key` inside the range."""
+        for j in np.flatnonzero(sub_key == key):
+            a, b_ = int(s_lo[j]), int(s_hi[j])
+            if b_ >= 0 and a < n_strides:
+                yield j, slice(a, b_ + 1)
+
+    scoring_keys = sub_key if is_not is None else sub_key[~is_not[sub]]
     ub = np.zeros(n_strides, dtype=np.float64)
-    # terms in order of first appearance (bit-identical ub accumulation to
+    # keys in order of first appearance (bit-identical ub accumulation to
     # the historical single-query loop, which iterated pandas .unique())
-    uniq_t, first_idx = np.unique(sub_term, return_index=True)
+    uniq_t, first_idx = np.unique(scoring_keys, return_index=True)
     for t in uniq_t[np.argsort(first_idx)]:
         term_ub = np.zeros(n_strides, dtype=np.float64)
-        for j in np.flatnonzero(sub_term == t):
-            a, b_ = int(s_lo[j]), int(s_hi[j])
-            if b_ < 0 or a >= n_strides:
-                continue
-            seg = term_ub[a : b_ + 1]
-            np.maximum(seg, bms[sub[j]], out=seg)
+        for j, sl in spans(t):
+            np.maximum(term_ub[sl], r.bms[sub[j]], out=term_ub[sl])
         ub += term_ub
+    n_must = 0
+    if is_must is not None:
+        for t in np.unique(sub_key[is_must[sub]]):
+            n_must += 1
+            cov = np.zeros(n_strides, dtype=bool)
+            for _, sl in spans(t):
+                cov[sl] = True
+            ub[~cov] = 0.0
+    if r.stride_mask is not None:
+        ub[~r.stride_mask] = 0.0
+    counting = n_must > 0 or msm > 0
 
-    if stride_mask is not None:
-        ub[~stride_mask] = 0.0
     order = np.argsort(-ub, kind="stable")
     heap: list[tuple[float, int]] = []  # min-heap of (score, -doc_id)
     theta = 0.0
@@ -142,13 +294,21 @@ def _bmw_range_topk(
         st_lo, st_hi = lo + si * stride, lo + (si + 1) * stride
         cand_ids: list[np.ndarray] = []
         cand_sc: list[np.ndarray] = []
-        overlap = np.flatnonzero((sub_fd < st_hi) & (sub_ld >= st_lo))
-        for j in overlap:
-            ids, sc = decode(int(sub[j]))
+        cand_must: list[np.ndarray] = []
+        ex_ids: list[np.ndarray] = []
+        for j in np.flatnonzero((sub_fd < st_hi) & (sub_ld >= st_lo)):
+            i = int(sub[j])
+            ids, sc = r.decode(i)
             m = (ids >= st_lo) & (ids < st_hi)
-            if m.any():
-                cand_ids.append(ids[m])
-                cand_sc.append(sc[m])
+            if not m.any():
+                continue
+            if is_not is not None and is_not[i]:
+                ex_ids.append(ids[m])
+                continue
+            cand_ids.append(ids[m])
+            cand_sc.append(sc[m])
+            if counting:
+                cand_must.append(np.full(int(m.sum()), is_must is not None and is_must[i]))
         if not cand_ids:
             continue
         all_ids = np.concatenate(cand_ids)
@@ -156,6 +316,20 @@ def _bmw_range_topk(
         uniq, inv = np.unique(all_ids, return_inverse=True)
         sums = np.zeros(uniq.shape, dtype=np.float64)
         np.add.at(sums, inv, all_sc)
+        if counting or ex_ids:
+            keep = np.ones(uniq.shape, dtype=bool)
+            if counting:
+                must = np.concatenate(cand_must).astype(np.int64)
+                mcnt = np.zeros(uniq.shape, dtype=np.int64)
+                np.add.at(mcnt, inv, must)  # one posting per (term, doc)
+                scnt = np.zeros(uniq.shape, dtype=np.int64)
+                np.add.at(scnt, inv, 1 - must)
+                keep = (mcnt == n_must) & (scnt >= msm)
+            if ex_ids:
+                keep &= ~np.isin(uniq, np.concatenate(ex_ids))
+            uniq, sums = uniq[keep], sums[keep]
+            if uniq.size == 0:
+                continue
         if after is not None:
             a_s, a_d = after
             keep = (sums < a_s) | ((sums == a_s) & (uniq > a_d))
@@ -169,60 +343,6 @@ def _bmw_range_topk(
         return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
     d_out, s_out = zip(*pairs)
     return np.asarray(d_out, dtype=np.int64), np.asarray(s_out, dtype=np.float64)
-
-
-_EMPTY_TOPK = {"doc_id": "int64", "score": "float64"}
-
-
-def _split_pseudo_rows(pdf: pd.DataFrame) -> tuple[pd.DataFrame, np.ndarray | None, dict]:
-    """Strip the two pseudo-row families that ride the rid shuffle and
-    return (block_rows, allow, dead). `allow` (sorted int64 ids, or None
-    when no filter context) comes from is_filt rows — the ES bool-filter
-    allow-list; `dead` maps build id -> dead doc_ids from is_tomb rows —
-    the per-segment overwrite tombstones. Shared by every kernel that
-    consumes the ranged union (wand_kernel, bool_kernel)."""
-    allow: np.ndarray | None = None
-    if "is_filt" in pdf.columns:
-        fm = pdf["is_filt"].to_numpy().astype(bool)
-        allow = np.sort(pdf.loc[fm, "first_doc_id"].to_numpy().astype(np.int64))
-        pdf = pdf[~fm].reset_index(drop=True)
-    dead: dict = {}
-    if not pdf.empty and "is_tomb" in pdf.columns:
-        tm = pdf["is_tomb"].to_numpy()
-        if tm.any():
-            trows = pdf[tm]
-            dead = {
-                b: g["first_doc_id"].to_numpy().astype(np.int64)
-                for b, g in trows.groupby("bid")
-            }
-            pdf = pdf[~tm].reset_index(drop=True)
-    return pdf, allow, dead
-
-
-def _make_decoder(pdf, idf_by_term, row_term, lo, hi, dead, row_bid, allow, avgdl):
-    """Lazy per-block decode closure: ids masked to [lo, hi), dead
-    versions and filter-context exclusions applied, scores precomputed.
-    Memoized — a block decodes at most once per kernel invocation; the
-    memo dict doubles as the decode counter for prune_stats."""
-    decoded: dict[int, tuple[np.ndarray, np.ndarray]] = {}
-
-    def decode(i: int) -> tuple[np.ndarray, np.ndarray]:
-        if i not in decoded:
-            ids = delta_decode_ids(pdf["doc_ids_varint"].iloc[i])
-            tfs = varint_decode(pdf["tfs_varint"].iloc[i]).astype(np.float64)
-            dls = varint_decode(pdf["dls_varint"].iloc[i]).astype(np.float64)
-            sc = _score_block(tfs, dls, idf_by_term[row_term[i]], avgdl)
-            m = (ids >= lo) & (ids < hi)
-            if dead and row_bid is not None:
-                dd = dead.get(row_bid[i])
-                if dd is not None and dd.size:
-                    m &= ~np.isin(ids, dd)  # overwritten versions never score
-            if allow is not None:
-                m &= np.isin(ids, allow)  # filter context: allowed docs only
-            decoded[i] = (ids[m], sc[m])
-        return decoded[i]
-
-    return decode, decoded
 
 
 def _merge_stride_topk(heap, uniq, sums, k):
@@ -245,6 +365,16 @@ def _merge_stride_topk(heap, uniq, sums, k):
     return heap, (heap[0][0] if len(heap) >= k else 0.0)
 
 
+def _range_topk(r: _Range, k: int, prune_stats: dict | None, **rules) -> pd.DataFrame:
+    """Local top-k over every block row of the range (see _bmw_range_topk
+    for `rules`), filling prune_stats with blocks total vs decoded."""
+    d_out, s_out = _bmw_range_topk(r, np.arange(len(r.term)), k, **rules)
+    if prune_stats is not None:
+        prune_stats["n_blocks_total"] = len(r.term)
+        prune_stats["n_blocks_decoded"] = len(r.decoded)
+    return _topk_frame(d_out, s_out)
+
+
 def wand_kernel(
     pdf: pd.DataFrame,
     n_docs: int,
@@ -259,61 +389,14 @@ def wand_kernel(
 
     Vectorized: per-stride upper bounds come from block metadata only;
     blocks are decoded lazily, at most once, and only when their stride is
-    actually visited. Each block row carries the GLOBAL df of its term (a
-    broadcast join against the merged terms tables), so idf is derived
-    here — no driver-side stats round-trip per query.
+    actually visited. Each block row carries the GLOBAL df of its term
+    (window-summed over the pruned block rows), so idf is derived here —
+    no driver-side stats round-trip per query. The pure disjunction: the
+    bool kernel with no must/must_not clause and msm = 0.
     """
-    rid = int(pdf["rid"].iloc[0])
-    empty = pd.DataFrame({"doc_id": [], "score": []}).astype(_EMPTY_TOPK)
-    # Pseudo-rows ride the same rid shuffle as the blocks (never a
-    # driver-held set): is_filt rows carry the ES filter-context
-    # allow-list, is_tomb rows the per-segment overwrite tombstones.
-    pdf, allow, dead = _split_pseudo_rows(pdf)
-    if (allow is not None and allow.size == 0) or pdf.empty:
-        return empty
-    row_bid = pdf["bid"].to_numpy() if "bid" in pdf.columns else None
-    tdf = pdf[["term", "df"]].drop_duplicates("term")
-    idf_by_term = _idf_map(tdf, n_docs)
-    lo, hi = rid * range_size, (rid + 1) * range_size
-    fd = pdf["first_doc_id"].to_numpy()
-    ld = pdf["last_doc_id"].to_numpy()
-    # block max score = idf(term) * stored idf-free tfnorm max, scaled by
-    # the per-segment bound correction (1.0 for a single-build index; for
-    # merge-on-read, max(1, avgdl_global/avgdl_segment) keeps the stored
-    # per-build tfnorm max a valid upper bound under the global avgdl)
-    scale = pdf["scale"].to_numpy() if "scale" in pdf.columns else 1.0
-    bms = pdf["block_max_tfnorm"].to_numpy() * pdf["term"].map(idf_by_term).to_numpy() * scale
-    row_term = pdf["term"].to_numpy()
-    decode, decoded = _make_decoder(
-        pdf, idf_by_term, row_term, lo, hi, dead, row_bid, allow, avgdl
-    )
-
-    stride_mask = None
-    if allow is not None:
-        # strides holding no allowed doc can never produce a candidate:
-        # zero their bound so they are never visited (blocks never decode)
-        n_strides = (range_size + stride - 1) // stride
-        stride_mask = np.zeros(n_strides, dtype=bool)
-        stride_mask[np.unique((allow - lo) // stride)] = True
-    d_out, s_out = _bmw_range_topk(
-        np.arange(len(pdf)),
-        row_term,
-        fd,
-        ld,
-        bms,
-        decode,
-        k,
-        lo,
-        range_size,
-        stride,
-        after=after,
-        stride_mask=stride_mask,
-    )
-    if prune_stats is not None:
-        prune_stats["n_blocks_total"] = len(pdf)
-        prune_stats["n_blocks_decoded"] = len(decoded)
-    return pd.DataFrame({"doc_id": d_out, "score": s_out}).astype(
-        {"doc_id": "int64", "score": "float64"}
+    return bool_kernel(
+        pdf, n_docs, avgdl, k, range_size, [], [], [],
+        stride=stride, prune_stats=prune_stats, after=after,
     )
 
 
@@ -334,156 +417,36 @@ def bool_kernel(
     """ES bool-query kernel for ONE doc_id range: top-k over docs that
     contain EVERY must term, at least `msm` distinct should terms, and NO
     must_not term; score = BM25 sum over must+should occurrences (the ES
-    bool semantics — filter context rides the existing is_filt rows).
-
-    Pruning stays block-max sound and gains a conjunctive rule: a stride
-    not covered by ≥1 block of EVERY must term cannot hold a qualifying
-    doc (a doc's posting for each must term lives in a block spanning its
-    id), so its bound is zeroed and its blocks never decode — the
-    dominant win for selective conjunctions. must_not blocks never
-    contribute to bounds; they decode only in strides actually visited.
+    bool semantics — filter context rides the is_filt rows). Every block
+    row whose term is neither must nor must_not scores as a should term.
+    Pruning rules: _bmw_range_topk.
 
     Clause term sets must be disjoint (asserted in bool_topk)."""
-    empty = pd.DataFrame({"doc_id": [], "score": []}).astype(_EMPTY_TOPK)
-    rid = int(pdf["rid"].iloc[0])
-    pdf, allow, dead = _split_pseudo_rows(pdf)
-    if (allow is not None and allow.size == 0) or pdf.empty:
-        return empty
-    must_s, should_s, not_s = set(must_terms), set(should_terms), set(not_terms)
-    present = set(pdf["term"])
+    r = _open_range(pdf, range_size, stride, {0: (n_docs, avgdl, 1.0)})
+    if r is None:
+        return _topk_frame([], [])
+    must_s, not_s = set(must_terms), set(not_terms)
     # a must term with no block in this range -> nothing here qualifies
     # (and if the term is absent from the whole index, EVERY range hits
     # this branch — the globally correct empty result)
-    if must_s - present:
-        return empty
-
-    row_bid = pdf["bid"].to_numpy() if "bid" in pdf.columns else None
-    tdf = pdf[["term", "df"]].drop_duplicates("term")
-    idf_by_term = _idf_map(tdf, n_docs)
-    lo, hi = rid * range_size, (rid + 1) * range_size
-    fd = pdf["first_doc_id"].to_numpy()
-    ld = pdf["last_doc_id"].to_numpy()
-    scale = pdf["scale"].to_numpy() if "scale" in pdf.columns else np.ones(len(pdf))
-    row_term = pdf["term"].to_numpy()
-    is_not = np.asarray([t in not_s for t in row_term])
-    is_must = np.asarray([t in must_s for t in row_term])
-    bms = (
-        pdf["block_max_tfnorm"].to_numpy()
-        * pdf["term"].map(idf_by_term).to_numpy()
-        * scale
+    if must_s and must_s - set(r.term):
+        return _topk_frame([], [])
+    is_must = np.asarray([t in must_s for t in r.term]) if must_s else None
+    is_not = np.asarray([t in not_s for t in r.term]) if not_s else None
+    return _range_topk(
+        r, k, prune_stats, after=after, is_must=is_must, is_not=is_not, msm=msm
     )
-
-    decode, decoded = _make_decoder(
-        pdf, idf_by_term, row_term, lo, hi, dead, row_bid, allow, avgdl
-    )
-
-    n_strides = (range_size + stride - 1) // stride
-    s_lo = np.maximum((fd - lo) // stride, 0).astype(np.int64)
-    s_hi = np.minimum((ld - lo) // stride, n_strides - 1).astype(np.int64)
-    # upper bound: scoring (must+should) terms only, max-per-term summed
-    ub = np.zeros(n_strides, dtype=np.float64)
-    for t in dict.fromkeys(row_term[~is_not]):
-        term_ub = np.zeros(n_strides, dtype=np.float64)
-        for j in np.flatnonzero((row_term == t) & ~is_not):
-            a, b_ = int(s_lo[j]), int(s_hi[j])
-            if b_ < 0 or a >= n_strides:
-                continue
-            seg = term_ub[a : b_ + 1]
-            np.maximum(seg, bms[j], out=seg)
-        ub += term_ub
-    # conjunctive coverage: zero strides missing any must term's blocks
-    for t in must_s:
-        cov = np.zeros(n_strides, dtype=bool)
-        for j in np.flatnonzero(row_term == t):
-            a, b_ = int(s_lo[j]), int(s_hi[j])
-            if b_ < 0 or a >= n_strides:
-                continue
-            cov[a : b_ + 1] = True
-        ub[~cov] = 0.0
-    if allow is not None:
-        amask = np.zeros(n_strides, dtype=bool)
-        amask[np.unique((allow - lo) // stride)] = True
-        ub[~amask] = 0.0
-
-    n_must = len(must_s)
-    order = np.argsort(-ub, kind="stable")
-    heap: list[tuple[float, int]] = []
-    theta = 0.0
-    for si in order:
-        if ub[si] <= 0.0:
-            break
-        if len(heap) >= k and ub[si] < theta:
-            break
-        st_lo, st_hi = lo + si * stride, lo + (si + 1) * stride
-        overlap = np.flatnonzero((fd < st_hi) & (ld >= st_lo))
-        sc_ids, sc_sc, sc_must, sc_should = [], [], [], []
-        ex_ids = []
-        for j in overlap:
-            ids, sc = decode(int(j))
-            m = (ids >= st_lo) & (ids < st_hi)
-            if not m.any():
-                continue
-            if is_not[j]:
-                ex_ids.append(ids[m])
-            else:
-                sc_ids.append(ids[m])
-                sc_sc.append(sc[m])
-                sc_must.append(np.full(int(m.sum()), is_must[j]))
-                sc_should.append(np.full(int(m.sum()), not is_must[j]))
-        if not sc_ids:
-            continue
-        all_ids = np.concatenate(sc_ids)
-        all_sc = np.concatenate(sc_sc)
-        all_must = np.concatenate(sc_must).astype(np.int64)
-        all_should = np.concatenate(sc_should).astype(np.int64)
-        uniq, inv = np.unique(all_ids, return_inverse=True)
-        sums = np.zeros(uniq.shape, dtype=np.float64)
-        np.add.at(sums, inv, all_sc)
-        mcnt = np.zeros(uniq.shape, dtype=np.int64)
-        np.add.at(mcnt, inv, all_must)  # one posting per (term, doc)
-        scnt = np.zeros(uniq.shape, dtype=np.int64)
-        np.add.at(scnt, inv, all_should)
-        keep = (mcnt == n_must) & (scnt >= msm)
-        if ex_ids:
-            keep &= ~np.isin(uniq, np.concatenate(ex_ids))
-        uniq, sums = uniq[keep], sums[keep]
-        if uniq.size == 0:
-            continue
-        if after is not None:
-            # search_after cut on exact scores (same sound placement as
-            # _bmw_range_topk: a stride bound says nothing about which
-            # side of the cursor its docs land on)
-            a_s, a_d = after
-            keep_a = (sums < a_s) | ((sums == a_s) & (uniq > a_d))
-            uniq, sums = uniq[keep_a], sums[keep_a]
-            if uniq.size == 0:
-                continue
-        heap, theta = _merge_stride_topk(heap, uniq, sums, k)
-
-    if prune_stats is not None:
-        prune_stats["n_blocks_total"] = len(pdf)
-        prune_stats["n_blocks_decoded"] = len(decoded)
-    pairs = sorted(((-d, s) for s, d in heap), key=lambda x: (-x[1], x[0]))
-    if not pairs:
-        return empty
-    d_out, s_out = zip(*pairs)
-    return pd.DataFrame(
-        {"doc_id": np.asarray(d_out, dtype=np.int64), "score": np.asarray(s_out)}
-    ).astype({"doc_id": "int64", "score": "float64"})
 
 
 def _two_pass_positions(
     pdf: pd.DataFrame,
+    n_docs: int,
+    range_size: int,
     uniq_terms: list[str],
-    row_term: np.ndarray,
-    lo: int,
-    hi: int,
-    dead: dict,
-    row_bid,
     or_terms: list[str] | None = None,
-    allow: np.ndarray | None = None,
-) -> tuple[dict | None, np.ndarray | None]:
-    """Shared two-pass decode for the positional kernels (VERDICT r3 #5).
+) -> tuple[dict, np.ndarray, dict[str, float], int] | None:
+    """Shared prologue of the positional kernels for ONE rid group:
+    pseudo-row split, idf, then a two-pass decode (VERDICT r3 #5).
 
     PASS 1 decodes ONLY doc_ids (+tf lengths) per block and intersects the
     terms' posting lists into the candidate doc set — the positions stream
@@ -502,24 +465,29 @@ def _two_pass_positions(
     from this range are simply skipped; per_term carries the surviving
     ones alongside the required terms.
 
-    Returns (per_term, cand_docs) with per_term[t] = (ids, tfs, dls,
-    occ_doc, occ_pos) restricted to candidates, or (None, None) when any
-    required term is absent, no or_term is present, or the intersection
-    is empty."""
+    Returns (per_term, cand_docs, idf_by_term, lo) with per_term[t] =
+    (ids, tfs, dls, occ_doc, occ_pos) restricted to candidates, or None
+    when any required term is absent, no or_term is present, or the
+    intersection is empty."""
+    rid = int(pdf["rid"].iloc[0])
+    pdf, allow, row_dead = _split_pseudo_rows(pdf)
+    if pdf.empty:
+        return None
+    idf_by_term = _idf_map(pdf[["term", "df"]].drop_duplicates("term"), n_docs)
+    lo, hi = rid * range_size, (rid + 1) * range_size
+    row_term = pdf["term"].to_numpy()
     term_rows: dict[str, np.ndarray] = {}
     raw: dict[int, tuple[np.ndarray, np.ndarray, np.ndarray]] = {}
     cand_docs = None
 
-    def decode_ids(t: str, rows: np.ndarray) -> np.ndarray:
+    def decode_ids(rows: np.ndarray) -> np.ndarray:
         parts = []
         for i in rows:
             ids = delta_decode_ids(pdf["doc_ids_varint"].iloc[i])
             tfs = varint_decode(pdf["tfs_varint"].iloc[i]).astype(np.int64)
             msk = (ids >= lo) & (ids < hi)
-            if dead and row_bid is not None:
-                dd = dead.get(row_bid[i])
-                if dd is not None and dd.size:
-                    msk &= ~np.isin(ids, dd)
+            if row_dead is not None and row_dead[i] is not None:
+                msk &= ~np.isin(ids, row_dead[i])
             raw[i] = (ids, tfs, msk)
             parts.append(ids[msk])
         return np.unique(np.concatenate(parts)) if parts else np.empty(0, np.int64)
@@ -527,14 +495,14 @@ def _two_pass_positions(
     for t in uniq_terms:
         rows = np.flatnonzero(row_term == t)
         if not rows.size:
-            return None, None  # a required term absent in this range -> no match
+            return None  # a required term absent in this range -> no match
         term_rows[t] = rows
-        u = decode_ids(t, rows)
+        u = decode_ids(rows)
         cand_docs = u if cand_docs is None else np.intersect1d(
             cand_docs, u, assume_unique=True
         )
         if cand_docs.size == 0:
-            return None, None
+            return None
     if allow is not None and cand_docs is not None:
         # ES filter context: only docs passing the docmap predicate can
         # match — narrowing HERE means PASS 2 never decodes positions for
@@ -542,7 +510,7 @@ def _two_pass_positions(
         # not just correct)
         cand_docs = np.intersect1d(cand_docs, allow, assume_unique=True)
         if cand_docs.size == 0:
-            return None, None
+            return None
     if or_terms:
         u_any = None
         for t in or_terms:
@@ -552,24 +520,24 @@ def _two_pass_positions(
             if not rows.size:
                 continue
             term_rows[t] = rows
-            u = decode_ids(t, rows)
+            u = decode_ids(rows)
             u_any = u if u_any is None else np.union1d(u_any, u)
         if not any(t in uniq_terms for t in or_terms):
             if u_any is None or u_any.size == 0:
-                return None, None
+                return None
             cand_docs = (
                 u_any
                 if cand_docs is None
                 else np.intersect1d(cand_docs, u_any, assume_unique=True)
             )
             if cand_docs.size == 0:
-                return None, None
+                return None
             if allow is not None:
                 # filter context also narrows an or_terms-only candidate
                 # set (no required terms: cand_docs was None above)
                 cand_docs = np.intersect1d(cand_docs, allow, assume_unique=True)
                 if cand_docs.size == 0:
-                    return None, None
+                    return None
         # an or_term that is ALSO required makes the disjunction a
         # tautology over the required intersection — no extra narrowing
     per_term: dict = {}
@@ -590,7 +558,7 @@ def _two_pass_positions(
             occ_pos.append(pos[em])
         if not ids_parts:
             if t in uniq_terms:  # unreachable while cand ⊆ required docs
-                return None, None
+                return None
             continue  # an or_term with no surviving docs just drops out
         per_term[t] = (
             np.concatenate(ids_parts),
@@ -599,7 +567,49 @@ def _two_pass_positions(
             np.concatenate(occ_doc),
             np.concatenate(occ_pos),
         )
-    return per_term, cand_docs
+    return per_term, cand_docs, idf_by_term, lo
+
+
+def _term_scores(per_term, t, docs, idf_by_term, avgdl):
+    """BM25 of term t in each of `docs` (sorted) holding it -> (ids, scores)."""
+    ids, tfs, dls, _, _ = per_term[t]
+    sel = np.isin(ids, docs)
+    return ids[sel], _score_block(tfs[sel].astype(np.float64), dls[sel], idf_by_term[t], avgdl)
+
+
+def _positional_topk(per_term, terms, matched, idf_by_term, avgdl, k, extra=None):
+    """Shared close of the positional kernels: each matched doc (sorted
+    ids) scores as the summed BM25 of the distinct `terms` plus its
+    `extra` score, cut to the local top-k."""
+    acc = np.zeros(matched.shape, dtype=np.float64)
+    for t in terms:
+        ids, s = _term_scores(per_term, t, matched, idf_by_term, avgdl)
+        np.add.at(acc, np.searchsorted(matched, ids), s)
+    if extra is not None:
+        acc += extra
+    order = np.lexsort((matched, -acc))[:k]
+    return _topk_frame(matched[order], acc[order])
+
+
+def _slot_keys(per_term, t, off, lo) -> np.ndarray:
+    """Candidate phrase starts of term t placed at phrase slot `off`, as
+    (doc, start) packed into ONE int64: the RANGE-LOCAL doc offset (doc -
+    lo < range_size <= 2^31) goes in the high bits, so the packing never
+    wraps no matter how large global doc_ids get."""
+    _, _, _, docs_r, pos_r = per_term[t]
+    ok = pos_r >= off
+    return np.unique(((docs_r[ok] - lo) << np.int64(32)) | (pos_r[ok] - off))
+
+
+def _phrase_starts(per_term, ordered, lo) -> np.ndarray | None:
+    """Intersection of the ordered slots' start keys (None for no slot)."""
+    cand = None
+    for off, t in enumerate(ordered):
+        keys = _slot_keys(per_term, t, off, lo)
+        cand = keys if cand is None else np.intersect1d(cand, keys, assume_unique=True)
+        if cand.size == 0:
+            break
+    return cand
 
 
 def phrase_kernel(
@@ -623,46 +633,16 @@ def phrase_kernel(
     phrase_topk; the DuckDB oracle mirrors it exactly). All set ops are
     vectorized (np.intersect1d on packed (doc << 32 | start) keys).
     """
-    empty = pd.DataFrame({"doc_id": [], "score": []}).astype(
-        {"doc_id": "int64", "score": "float64"}
-    )
-    rid = int(pdf["rid"].iloc[0])
-    pdf, allow, dead = _split_pseudo_rows(pdf)
-    if pdf.empty:
-        return empty
-    row_bid = pdf["bid"].to_numpy() if "bid" in pdf.columns else None
-    tdf = pdf[["term", "df"]].drop_duplicates("term")
-    idf_by_term = _idf_map(tdf, n_docs)
-    lo, hi = rid * range_size, (rid + 1) * range_size
     uniq_terms = sorted(set(terms_ordered))
-    row_term = pdf["term"].to_numpy()
-    per_term, cand_docs = _two_pass_positions(
-        pdf, uniq_terms, row_term, lo, hi, dead, row_bid, allow=allow
-    )
-    if per_term is None:
-        return empty
-    cand = None
-    for off, t in enumerate(terms_ordered):
-        _, _, _, docs_r, pos_r = per_term[t]
-        ok = pos_r >= off
-        # pack (doc, candidate start) into ONE int64: the RANGE-LOCAL doc
-        # offset (doc - lo < range_size <= 2^31) goes in the high bits, so
-        # the packing never wraps no matter how large global doc_ids get
-        keys = np.unique(((docs_r[ok] - lo) << np.int64(32)) | (pos_r[ok] - off))
-        cand = keys if cand is None else np.intersect1d(cand, keys, assume_unique=True)
-        if cand.size == 0:
-            return empty
+    opened = _two_pass_positions(pdf, n_docs, range_size, uniq_terms)
+    if opened is None:
+        return _topk_frame([], [])
+    per_term, _, idf_by_term, lo = opened
+    cand = _phrase_starts(per_term, terms_ordered, lo)
+    if cand.size == 0:
+        return _topk_frame([], [])
     matched = np.unique(cand >> np.int64(32)) + lo
-    acc = np.zeros(matched.shape, dtype=np.float64)
-    for t in uniq_terms:
-        ids, tfs, dls, _, _ = per_term[t]
-        sel = np.isin(ids, matched)
-        s = _score_block(tfs[sel].astype(np.float64), dls[sel], idf_by_term[t], avgdl)
-        np.add.at(acc, np.searchsorted(matched, ids[sel]), s)
-    order = np.lexsort((matched, -acc))[:k]
-    return pd.DataFrame({"doc_id": matched[order], "score": acc[order]}).astype(
-        {"doc_id": "int64", "score": "float64"}
-    )
+    return _positional_topk(per_term, uniq_terms, matched, idf_by_term, avgdl, k)
 
 
 def phrase_prefix_kernel(
@@ -683,64 +663,34 @@ def phrase_prefix_kernel(
     expansion's BM25 (the per-doc max over expansions that actually
     complete the phrase there) — deterministic and replayed exactly by
     the DuckDB oracle."""
-    empty = pd.DataFrame({"doc_id": [], "score": []}).astype(_EMPTY_TOPK)
-    rid = int(pdf["rid"].iloc[0])
-    pdf, allow, dead = _split_pseudo_rows(pdf)
-    if pdf.empty:
-        return empty
-    row_bid = pdf["bid"].to_numpy() if "bid" in pdf.columns else None
-    tdf = pdf[["term", "df"]].drop_duplicates("term")
-    idf_by_term = _idf_map(tdf, n_docs)
-    lo, hi = rid * range_size, (rid + 1) * range_size
     uniq_fixed = sorted(set(fixed_ordered))
-    row_term = pdf["term"].to_numpy()
-    per_term, cand_docs = _two_pass_positions(
-        pdf, uniq_fixed, row_term, lo, hi, dead, row_bid,
-        or_terms=sorted(set(exp_terms)), allow=allow,
-    )
-    if per_term is None:
-        return empty
-    cand = None
-    for off, t in enumerate(fixed_ordered):
-        _, _, _, docs_r, pos_r = per_term[t]
-        ok = pos_r >= off
-        keys = np.unique(((docs_r[ok] - lo) << np.int64(32)) | (pos_r[ok] - off))
-        cand = keys if cand is None else np.intersect1d(cand, keys, assume_unique=True)
-        if cand.size == 0:
-            return empty
-    off_last = len(fixed_ordered)
+    uniq_exp = sorted(set(exp_terms))
+    opened = _two_pass_positions(pdf, n_docs, range_size, uniq_fixed, or_terms=uniq_exp)
+    if opened is None:
+        return _topk_frame([], [])
+    per_term, _, idf_by_term, lo = opened
+    cand = _phrase_starts(per_term, fixed_ordered, lo)
+    if cand is not None and cand.size == 0:
+        return _topk_frame([], [])
     matched_per_e: list[tuple[str, np.ndarray]] = []
-    for e in sorted(set(exp_terms)):
+    for e in uniq_exp:
         if e not in per_term:
             continue
-        _, _, _, docs_r, pos_r = per_term[e]
-        ok = pos_r >= off_last
-        keys_e = np.unique(((docs_r[ok] - lo) << np.int64(32)) | (pos_r[ok] - off_last))
+        keys_e = _slot_keys(per_term, e, len(fixed_ordered), lo)
         me_keys = (
             keys_e if cand is None else np.intersect1d(cand, keys_e, assume_unique=True)
         )
         if me_keys.size:
             matched_per_e.append((e, np.unique(me_keys >> np.int64(32)) + lo))
     if not matched_per_e:
-        return empty
+        return _topk_frame([], [])
     matched = np.unique(np.concatenate([me for _, me in matched_per_e]))
-    acc = np.zeros(matched.shape, dtype=np.float64)
-    for t in uniq_fixed:
-        ids, tfs, dls, _, _ = per_term[t]
-        sel = np.isin(ids, matched)
-        s = _score_block(tfs[sel].astype(np.float64), dls[sel], idf_by_term[t], avgdl)
-        np.add.at(acc, np.searchsorted(matched, ids[sel]), s)
     best = np.full(matched.shape, -np.inf)
     for e, me in matched_per_e:
-        ids, tfs, dls, _, _ = per_term[e]
-        sel = np.isin(ids, me)
-        s = _score_block(tfs[sel].astype(np.float64), dls[sel], idf_by_term[e], avgdl)
-        np.maximum.at(best, np.searchsorted(matched, ids[sel]), s)
-    acc += best  # every matched doc completed the phrase with >= 1 expansion
-    order = np.lexsort((matched, -acc))[:k]
-    return pd.DataFrame({"doc_id": matched[order], "score": acc[order]}).astype(
-        _EMPTY_TOPK
-    )
+        ids, s = _term_scores(per_term, e, me, idf_by_term, avgdl)
+        np.maximum.at(best, np.searchsorted(matched, ids), s)
+    # every matched doc completed the phrase with >= 1 expansion
+    return _positional_topk(per_term, uniq_fixed, matched, idf_by_term, avgdl, k, best)
 
 
 def _min_cover_mask(
@@ -790,31 +740,17 @@ def near_kernel(
     whose analyzed token stream contains ALL query terms within a WINDOW
     of `window` consecutive positions (any order) — proximity search, the
     unordered cousin of match_phrase. Candidate docs are the intersection
-    of the terms' posting lists; the window test is the classic minimal-
-    cover two-pointer sweep over each candidate's merged occurrence
-    stream (O(occurrences), only for docs already known to contain every
-    term). Matched docs score as the summed BM25 of the distinct query
-    terms (same rank semantics as phrase_topk; the DuckDB oracle mirrors
-    the window test with list slices)."""
-    empty = pd.DataFrame({"doc_id": [], "score": []}).astype(
-        {"doc_id": "int64", "score": "float64"}
-    )
-    rid = int(pdf["rid"].iloc[0])
-    pdf, allow, dead = _split_pseudo_rows(pdf)
-    if pdf.empty:
-        return empty
-    row_bid = pdf["bid"].to_numpy() if "bid" in pdf.columns else None
-    tdf = pdf[["term", "df"]].drop_duplicates("term")
-    idf_by_term = _idf_map(tdf, n_docs)
-    lo, hi = rid * range_size, (rid + 1) * range_size
+    of the terms' posting lists; the window test (_min_cover_mask) runs
+    over each candidate's merged occurrence stream (O(occurrences), only
+    for docs already known to contain every term). Matched docs score as
+    the summed BM25 of the distinct query terms (same rank semantics as
+    phrase_topk; the DuckDB oracle mirrors the window test with list
+    slices)."""
     uniq_terms = sorted(set(terms))
-    m = len(uniq_terms)
-    row_term = pdf["term"].to_numpy()
-    per_term, cand = _two_pass_positions(
-        pdf, uniq_terms, row_term, lo, hi, dead, row_bid, allow=allow
-    )
-    if per_term is None:
-        return empty
+    opened = _two_pass_positions(pdf, n_docs, range_size, uniq_terms)
+    if opened is None:
+        return _topk_frame([], [])
+    per_term, cand, idf_by_term, _ = opened
     d_all = np.concatenate([per_term[t][3] for t in uniq_terms])
     p_all = np.concatenate([per_term[t][4] for t in uniq_terms])
     g_all = np.concatenate(
@@ -826,20 +762,11 @@ def near_kernel(
     n = d.size
     starts = np.flatnonzero(np.concatenate(([True], d[1:] != d[:-1])))
     ends = np.concatenate((starts[1:], [n]))
-    doc_ok = _min_cover_mask(p, g, m, window, starts, ends)
+    doc_ok = _min_cover_mask(p, g, len(uniq_terms), window, starts, ends)
     if not doc_ok.any():
-        return empty
+        return _topk_frame([], [])
     matched = d[starts[doc_ok]]
-    acc = np.zeros(matched.shape, dtype=np.float64)
-    for t in uniq_terms:
-        ids, tfs, dls, _, _ = per_term[t]
-        s_ = np.isin(ids, matched)
-        sc = _score_block(tfs[s_].astype(np.float64), dls[s_], idf_by_term[t], avgdl)
-        np.add.at(acc, np.searchsorted(matched, ids[s_]), sc)
-    order = np.lexsort((matched, -acc))[:k]
-    return pd.DataFrame({"doc_id": matched[order], "score": acc[order]}).astype(
-        {"doc_id": "int64", "score": "float64"}
-    )
+    return _positional_topk(per_term, uniq_terms, matched, idf_by_term, avgdl, k)
 
 
 def multiquery_kernel(
@@ -859,57 +786,19 @@ def multiquery_kernel(
     how many queries share it — a stop-word block no longer replicates per
     query. Each query then runs the SAME stride-level block-max WAND loop
     as the single-query path (_bmw_range_topk) restricted to its own
-    terms' rows, over a decode cache SHARED across the whole batch
-    (ADVICE r3: the former exhaustive per-term decode scaled batch latency
-    with total postings; now a rare-term query prunes exactly like its
-    single-query run, and shared stop-word blocks are decoded once for the
-    batch, lazily — never at all if no query's WAND loop reaches them).
-    The query->terms map rides in the closure (per-batch metadata, a few
-    KB even for 1,000 queries); scores never shuffle.
+    terms' rows, over a decode cache SHARED across the whole batch: a
+    rare-term query prunes exactly like its single-query run, and shared
+    stop-word blocks are decoded once for the batch, lazily — never at
+    all if no query's WAND loop reaches them. The query->terms map rides
+    in the closure (per-batch metadata, a few KB even for 1,000 queries);
+    scores never shuffle.
     """
-    empty = pd.DataFrame({"query_id": [], "doc_id": [], "score": []}).astype(
-        {"query_id": "int64", "doc_id": "int64", "score": "float64"}
-    )
-    rid = int(pdf["rid"].iloc[0])
-    dead: dict = {}
-    if "is_tomb" in pdf.columns:
-        tm = pdf["is_tomb"].to_numpy()
-        if tm.any():
-            trows = pdf[tm]
-            dead = {
-                b: g["first_doc_id"].to_numpy().astype(np.int64)
-                for b, g in trows.groupby("bid")
-            }
-            pdf = pdf[~tm].reset_index(drop=True)
-    if pdf.empty:
+    out_types = {"query_id": "int64", "doc_id": "int64", "score": "float64"}
+    empty = pd.DataFrame({"query_id": [], "doc_id": [], "score": []}).astype(out_types)
+    r = _open_range(pdf, range_size, stride, {0: (n_docs, avgdl, 1.0)})
+    if r is None:
         return empty
-    row_bid = pdf["bid"].to_numpy() if "bid" in pdf.columns else None
-    tdf = pdf[["term", "df"]].drop_duplicates("term")
-    idf_by_term = _idf_map(tdf, n_docs)
-    lo, hi = rid * range_size, (rid + 1) * range_size
-    fd = pdf["first_doc_id"].to_numpy()
-    ld = pdf["last_doc_id"].to_numpy()
-    scale = pdf["scale"].to_numpy() if "scale" in pdf.columns else 1.0
-    bms = pdf["block_max_tfnorm"].to_numpy() * pdf["term"].map(idf_by_term).to_numpy() * scale
-    row_term = pdf["term"].to_numpy()
-
-    decoded: dict[int, tuple[np.ndarray, np.ndarray]] = {}  # SHARED across queries
-
-    def decode(i: int) -> tuple[np.ndarray, np.ndarray]:
-        if i not in decoded:
-            ids = delta_decode_ids(pdf["doc_ids_varint"].iloc[i])
-            tfs = varint_decode(pdf["tfs_varint"].iloc[i]).astype(np.float64)
-            dls = varint_decode(pdf["dls_varint"].iloc[i]).astype(np.float64)
-            sc = _score_block(tfs, dls, idf_by_term[row_term[i]], avgdl)
-            m = (ids >= lo) & (ids < hi)
-            if dead and row_bid is not None:
-                dd = dead.get(row_bid[i])
-                if dd is not None and dd.size:
-                    m &= ~np.isin(ids, dd)
-            decoded[i] = (ids[m], sc[m])
-        return decoded[i]
-
-    term_rows = {t: np.flatnonzero(row_term == t) for t in np.unique(row_term)}
+    term_rows = {t: np.flatnonzero(r.term == t) for t in np.unique(r.term)}
     frames = []
     for qid, terms in per_q.items():
         idxs = [term_rows[t] for t in terms if t in term_rows]
@@ -918,18 +807,14 @@ def multiquery_kernel(
         # ascending row order: candidate concatenation order then matches
         # the single-query kernel exactly (bit-identical scores)
         sub = np.sort(np.concatenate(idxs))
-        d_out, s_out = _bmw_range_topk(
-            sub, row_term, fd, ld, bms, decode, k_by_q[qid], lo, range_size, stride
-        )
+        d_out, s_out = _bmw_range_topk(r, sub, k_by_q[qid])
         if d_out.size:
             frames.append(
                 pd.DataFrame({"query_id": qid, "doc_id": d_out, "score": s_out})
             )
     if not frames:
         return empty
-    return pd.concat(frames, ignore_index=True).astype(
-        {"query_id": "int64", "doc_id": "int64", "score": "float64"}
-    )
+    return pd.concat(frames, ignore_index=True).astype(out_types)
 
 
 class IndexReader:
@@ -1069,20 +954,61 @@ class IndexReader:
             )
         return self.spark.read.schema(TOMB_SCHEMA).parquet(*dirs)
 
-    def _tomb_ranged(self, range_size: int) -> DataFrame | None:
-        """Tombstones as pseudo-block rows keyed by the same rid partition
-        as the posting blocks — the dead sets travel in the SAME shuffle,
-        fully distributed (never a driver-held set)."""
-        t = self._tombstones_df()
-        if t is None:
-            return None
-        return t.select(
-            F.col("dead_build").alias("bid"),
-            F.col("doc_id").alias("first_doc_id"),
-            F.col("doc_id").alias("last_doc_id"),
-            (F.col("doc_id") / range_size).cast("long").alias("rid"),
-            F.lit(True).alias("is_tomb"),
-        )
+    def _ranged(self, blocks: DataFrame, range_size: int, flt=None) -> DataFrame:
+        """The ranged-block layout every scoring kernel consumes (the one
+        place that writes the pseudo-row encoding _split_pseudo_rows
+        reads): one row per (posting block, doc_id range it overlaps),
+        keyed by `rid`. A block overlapping several ranges is replicated
+        to each; the kernel masks decoded ids to its own range, so no doc
+        scores twice. Two pseudo-row families ride the SAME rid shuffle —
+        never a driver-held set: is_tomb rows carry the per-segment
+        overwrite tombstones, and with `flt` (ES filter context, a
+        Catalyst predicate over docmap columns) is_filt rows carry the
+        allow-list — the predicate pushes into the docmap scan and only
+        SURVIVING doc ids travel."""
+        rid = F.explode(
+            F.sequence(
+                (F.col("first_doc_id") / range_size).cast("long"),
+                (F.col("last_doc_id") / range_size).cast("long"),
+            )
+        ).alias("rid")
+        ranged = blocks.select("*", rid).withColumn("is_tomb", F.lit(False))
+        tomb = self._tombstones_df()
+        if tomb is not None:
+            ranged = ranged.unionByName(
+                tomb.select(
+                    F.col("dead_build").alias("bid"),
+                    F.col("doc_id").alias("first_doc_id"),
+                    F.col("doc_id").alias("last_doc_id"),
+                    (F.col("doc_id") / range_size).cast("long").alias("rid"),
+                    F.lit(True).alias("is_tomb"),
+                ),
+                allowMissingColumns=True,
+            )
+        if flt is not None:
+            ranged = ranged.withColumn("is_filt", F.lit(False)).unionByName(
+                self.docmap()
+                .filter(flt)
+                .select(
+                    F.col("doc_id").alias("first_doc_id"),
+                    (F.col("doc_id") / range_size).cast("long").alias("rid"),
+                    F.lit(False).alias("is_tomb"),
+                    F.lit(True).alias("is_filt"),
+                ),
+                allowMissingColumns=True,
+            )
+        return ranged
+
+    def _global_topk(self, local: DataFrame, k: int, with_docmap: bool = False) -> DataFrame:
+        """Merge the per-range top-k rows: orderBy(score desc, doc_id
+        asc).limit(k) compiles to a TakeOrdered over tiny heaps, not a full
+        sort; `with_docmap` joins each winner's repo/path."""
+        out = local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        if with_docmap:
+            out = out.join(self.docmap().select("doc_id", "repo", "path"), "doc_id").orderBy(
+                F.desc("score"), F.asc("doc_id")
+            )
+        return out
 
     def docmap(self) -> DataFrame:
         from ..sources.segments import BID_PATTERN, SegmentStore, docmap_dirs
@@ -1173,9 +1099,9 @@ class IndexReader:
         the term's GLOBAL df is derived from the blocks THEMSELVES — a
         posting block stores its doc count (n_docs), and a term's df is
         exactly the sum of its blocks' n_docs across live segments, so a
-        window-sum over the already-pruned block rows replaces the former
-        terms-table read + broadcast materialization (two fewer jobs per
-        warm query; the window exchange moves only the pruned block rows).
+        window-sum over the already-pruned block rows yields it inside the
+        same plan: no terms-table read and no extra job per query, and the
+        window exchange moves only the pruned block rows.
 
         with_positions=False drops the pos_varint column BEFORE the range
         shuffle (and Catalyst prunes it from the parquet scan), so plain
@@ -1206,21 +1132,6 @@ class IndexReader:
             blocks = blocks.drop("pos_varint")
         return blocks.withColumn(
             "df", F.sum("n_docs").over(Window.partitionBy("term")).cast("long")
-        )
-
-    def idf_for_terms(self, terms: list[str]) -> dict[str, float]:
-        """Driver-side idf lookup (kept for diagnostics/tests; the query
-        path no longer calls this — df rides along with the blocks)."""
-        import numpy as np
-
-        n_docs = self.stats["N"]
-        dfs = self._df_for_terms(terms)
-        if dfs is None:
-            return {}
-        rows = dfs.collect()
-        return _idf_map(
-            {"term": [r["term"] for r in rows], "df": [int(r["df"]) for r in rows]},
-            n_docs,
         )
 
     def _prefix_terms_df(self, prefix: str, max_terms: int = 256) -> DataFrame | None:
@@ -2193,11 +2104,7 @@ class IndexReader:
         and stride bounds remain valid upper bounds for any subset.
         docmap() is tombstone-masked, so an overwritten doc's live version
         filters on its CURRENT attributes; dead versions are additionally
-        masked per-build as in every decode path.
-
-        (r6: the allow-list plumbing moved into _topk_terms/_with_filter
-        so every expansion path — topk, prefix, fuzzy, phrase, near,
-        phrase_prefix — shares it; this method is the stable named API.)"""
+        masked per-build as in every decode path."""
         return self._topk_terms(
             sorted(set(tokenize_py(query))),
             k,
@@ -2247,28 +2154,6 @@ class IndexReader:
             return empty
         n_docs = self.stats["N"]
         avgdl = self.stats["avgdl"]
-        rid = F.explode(
-            F.sequence(
-                (F.col("first_doc_id") / range_size).cast("long"),
-                (F.col("last_doc_id") / range_size).cast("long"),
-            )
-        ).alias("rid")
-        ranged = blocks.select("*", rid).withColumn("is_tomb", F.lit(False))
-        tomb = self._tomb_ranged(range_size)
-        if tomb is not None:
-            ranged = ranged.unionByName(tomb, allowMissingColumns=True)
-        if flt is not None:
-            ranged = ranged.withColumn("is_filt", F.lit(False)).unionByName(
-                self.docmap()
-                .filter(flt)
-                .select(
-                    F.col("doc_id").alias("first_doc_id"),
-                    (F.col("doc_id") / range_size).cast("long").alias("rid"),
-                    F.lit(False).alias("is_tomb"),
-                    F.lit(True).alias("is_filt"),
-                ),
-                allowMissingColumns=True,
-            )
 
         def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
             return bool_kernel(
@@ -2276,13 +2161,8 @@ class IndexReader:
                 after=after,
             )
 
-        local = ranged.groupBy("rid").applyInPandas(kernel, WAND_OUT_SCHEMA)
-        out = local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        if with_docmap:
-            out = out.join(self.docmap().select("doc_id", "repo", "path"), "doc_id").orderBy(
-                F.desc("score"), F.asc("doc_id")
-            )
-        return out
+        local = _by_range(self._ranged(blocks, range_size, flt), kernel)
+        return self._global_topk(local, k, with_docmap)
 
     def phrase_topk(
         self,
@@ -2316,29 +2196,12 @@ class IndexReader:
             return empty
         n_docs = self.stats["N"]
         avgdl = self.stats["avgdl"]
-        rid = F.explode(
-            F.sequence(
-                (F.col("first_doc_id") / range_size).cast("long"),
-                (F.col("last_doc_id") / range_size).cast("long"),
-            )
-        ).alias("rid")
-        ranged = blocks.select("*", rid).withColumn("is_tomb", F.lit(False))
-        tomb = self._tomb_ranged(range_size)
-        if tomb is not None:
-            ranged = ranged.unionByName(tomb, allowMissingColumns=True)
-
-        ranged = self._with_filter(ranged, flt, range_size)
 
         def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
             return phrase_kernel(pdf, terms, n_docs, avgdl, k, range_size)
 
-        local = ranged.groupBy("rid").applyInPandas(kernel, WAND_OUT_SCHEMA)
-        out = local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        if with_docmap:
-            out = out.join(self.docmap().select("doc_id", "repo", "path"), "doc_id").orderBy(
-                F.desc("score"), F.asc("doc_id")
-            )
-        return out
+        local = _by_range(self._ranged(blocks, range_size, flt), kernel)
+        return self._global_topk(local, k, with_docmap)
 
     def phrase_prefix_topk(
         self,
@@ -2382,29 +2245,12 @@ class IndexReader:
             return empty
         n_docs = self.stats["N"]
         avgdl = self.stats["avgdl"]
-        rid = F.explode(
-            F.sequence(
-                (F.col("first_doc_id") / range_size).cast("long"),
-                (F.col("last_doc_id") / range_size).cast("long"),
-            )
-        ).alias("rid")
-        ranged = blocks.select("*", rid).withColumn("is_tomb", F.lit(False))
-        tomb = self._tomb_ranged(range_size)
-        if tomb is not None:
-            ranged = ranged.unionByName(tomb, allowMissingColumns=True)
-
-        ranged = self._with_filter(ranged, flt, range_size)
 
         def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
             return phrase_prefix_kernel(pdf, fixed, exp, n_docs, avgdl, k, range_size)
 
-        local = ranged.groupBy("rid").applyInPandas(kernel, WAND_OUT_SCHEMA)
-        out = local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        if with_docmap:
-            out = out.join(self.docmap().select("doc_id", "repo", "path"), "doc_id").orderBy(
-                F.desc("score"), F.asc("doc_id")
-            )
-        return out
+        local = _by_range(self._ranged(blocks, range_size, flt), kernel)
+        return self._global_topk(local, k, with_docmap)
 
     def near_topk(
         self,
@@ -2437,29 +2283,12 @@ class IndexReader:
             return empty
         n_docs = self.stats["N"]
         avgdl = self.stats["avgdl"]
-        rid = F.explode(
-            F.sequence(
-                (F.col("first_doc_id") / range_size).cast("long"),
-                (F.col("last_doc_id") / range_size).cast("long"),
-            )
-        ).alias("rid")
-        ranged = blocks.select("*", rid).withColumn("is_tomb", F.lit(False))
-        tomb = self._tomb_ranged(range_size)
-        if tomb is not None:
-            ranged = ranged.unionByName(tomb, allowMissingColumns=True)
-
-        ranged = self._with_filter(ranged, flt, range_size)
 
         def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
             return near_kernel(pdf, terms, window, n_docs, avgdl, k, range_size)
 
-        local = ranged.groupBy("rid").applyInPandas(kernel, WAND_OUT_SCHEMA)
-        out = local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        if with_docmap:
-            out = out.join(self.docmap().select("doc_id", "repo", "path"), "doc_id").orderBy(
-                F.desc("score"), F.asc("doc_id")
-            )
-        return out
+        local = _by_range(self._ranged(blocks, range_size, flt), kernel)
+        return self._global_topk(local, k, with_docmap)
 
     def topk_many(
         self,
@@ -2478,39 +2307,13 @@ class IndexReader:
         latency at small scale) amortizes across the set — this is the
         shape a production batch scorer uses.
         """
-        import pandas as pd  # noqa: F811
-
         per_q = {qid: sorted(set(tokenize_py(q))) for qid, q, k in queries}
         k_by_q = {qid: k for qid, _, k in queries}
-        all_terms = sorted({t for ts in per_q.values() for t in ts})
-        empty = self.spark.createDataFrame(
-            [], "query_id long, rank int, doc_id long, score double"
-        )
-        if not all_terms:
-            return empty
-        blocks = self._blocks_for_terms(all_terms)
-        if blocks is None:
-            return empty
-        n_docs = self.stats["N"]
-        avgdl = self.stats["avgdl"]
-
-        rid = F.explode(
-            F.sequence(
-                (F.col("first_doc_id") / range_size).cast("long"),
-                (F.col("last_doc_id") / range_size).cast("long"),
+        local = self._multiquery_scores(per_q, k_by_q, range_size)
+        if local is None:
+            return self.spark.createDataFrame(
+                [], "query_id long, rank int, doc_id long, score double"
             )
-        ).alias("rid")
-        ranged = blocks.select("*", rid).withColumn("is_tomb", F.lit(False))
-        tomb = self._tomb_ranged(range_size)
-        if tomb is not None:
-            ranged = ranged.unionByName(tomb, allowMissingColumns=True)
-
-        def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-            return multiquery_kernel(pdf, per_q, k_by_q, n_docs, avgdl, range_size)
-
-        local = ranged.groupBy("rid").applyInPandas(
-            kernel, "query_id long, doc_id long, score double"
-        )
         w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
         ranked = local.withColumn("rank", F.row_number().over(w))
         cond = None
@@ -2518,6 +2321,33 @@ class IndexReader:
             c = (F.col("query_id") == qid) & (F.col("rank") <= k)
             cond = c if cond is None else (cond | c)
         return ranked.filter(cond).select("query_id", "rank", "doc_id", "score")
+
+    def _multiquery_scores(
+        self,
+        per_q: dict[int, list[str]],
+        k_by_q: dict[int, int],
+        range_size: int,
+        rids: list[int] | None = None,
+    ) -> DataFrame | None:
+        """Per-range local top-k of every query in per_q in ONE pass ->
+        (query_id, doc_id, score): blocks for the union of all queries'
+        terms are read and rid-shuffled once and multiquery_kernel scores
+        them. `rids` restricts decoding to those doc_id ranges. None when
+        no query term has a block."""
+        all_terms = sorted({t for ts in per_q.values() for t in ts})
+        blocks = self._blocks_for_terms(all_terms) if all_terms else None
+        if blocks is None:
+            return None
+        n_docs = self.stats["N"]
+        avgdl = self.stats["avgdl"]
+        ranged = self._ranged(blocks, range_size)
+        if rids is not None:
+            ranged = ranged.filter(F.col("rid").isin([int(r) for r in rids]))
+
+        def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+            return multiquery_kernel(pdf, per_q, k_by_q, n_docs, avgdl, range_size)
+
+        return _by_range(ranged, kernel, "query_id long, doc_id long, score double")
 
     def scores(self, terms: list[str], range_size: int = RANGE_SIZE_DEFAULT) -> DataFrame:
         """ALL docs matching >= 1 term, with their full BM25 scores —
@@ -2533,44 +2363,11 @@ class IndexReader:
             return empty
         n_docs = self.stats["N"]
         avgdl = self.stats["avgdl"]
-        rid = F.explode(
-            F.sequence(
-                (F.col("first_doc_id") / range_size).cast("long"),
-                (F.col("last_doc_id") / range_size).cast("long"),
-            )
-        ).alias("rid")
-        ranged = blocks.select("*", rid).withColumn("is_tomb", F.lit(False))
-        tomb = self._tomb_ranged(range_size)
-        if tomb is not None:
-            ranged = ranged.unionByName(tomb, allowMissingColumns=True)
 
         def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
             return wand_kernel(pdf, n_docs, avgdl, range_size, range_size)
 
-        return ranged.groupBy("rid").applyInPandas(kernel, WAND_OUT_SCHEMA)
-
-    def _filter_rows(self, flt, range_size: int) -> DataFrame:
-        """ES bool-filter allow-list as pseudo-rows riding the SAME rid
-        shuffle as the posting blocks (the tombstone pattern — never a
-        driver-held set): the docmap predicate pushes into the parquet
-        scan and only SURVIVING doc ids travel."""
-        return (
-            self.docmap()
-            .filter(flt)
-            .select(
-                F.col("doc_id").alias("first_doc_id"),
-                (F.col("doc_id") / range_size).cast("long").alias("rid"),
-                F.lit(False).alias("is_tomb"),
-                F.lit(True).alias("is_filt"),
-            )
-        )
-
-    def _with_filter(self, ranged: DataFrame, flt, range_size: int) -> DataFrame:
-        if flt is None:
-            return ranged
-        return ranged.withColumn("is_filt", F.lit(False)).unionByName(
-            self._filter_rows(flt, range_size), allowMissingColumns=True
-        )
+        return _by_range(self._ranged(blocks, range_size), kernel)
 
     def _topk_terms(
         self,
@@ -2590,30 +2387,17 @@ class IndexReader:
         n_docs = self.stats["N"]
         avgdl = self.stats["avgdl"]
 
-        # A block overlapping multiple ranges is replicated to each; the
-        # kernel masks decoded ids to its own range, so no double counting.
-        rid = F.explode(
-            F.sequence(
-                (F.col("first_doc_id") / range_size).cast("long"),
-                (F.col("last_doc_id") / range_size).cast("long"),
-            )
-        ).alias("rid")
-        ranged = blocks.select("*", rid).withColumn("is_tomb", F.lit(False))
-        tomb = self._tomb_ranged(range_size)
-        if tomb is not None:
-            ranged = ranged.unionByName(tomb, allowMissingColumns=True)
-        ranged = self._with_filter(ranged, flt, range_size)
-
         def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
             return wand_kernel(pdf, n_docs, avgdl, k, range_size, after=after)
 
-        local = ranged.groupBy("rid").applyInPandas(kernel, WAND_OUT_SCHEMA)
-        out = local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        if with_docmap:
-            out = out.join(self.docmap().select("doc_id", "repo", "path"), "doc_id").orderBy(
-                F.desc("score"), F.asc("doc_id")
-            )
-        return out
+        local = _by_range(self._ranged(blocks, range_size, flt), kernel)
+        return self._global_topk(local, k, with_docmap)
+
+
+def _by_range(ranged: DataFrame, kernel, schema: str = WAND_OUT_SCHEMA) -> DataFrame:
+    """Run a range kernel (pandas rows of ONE rid -> result rows) on every
+    rid group of an IndexReader._ranged layout."""
+    return ranged.groupBy("rid").applyInPandas(kernel, schema)
 
 
 def multifield_kernel(
@@ -2632,89 +2416,16 @@ def multifield_kernel(
     OWN statistics (the Lucene per-field model). The stride upper bound is
     the sum over (field, term) pairs of boost_f x idf_{f,t} x the pair's
     block-max tfnorm — a valid bound on the combined score because a doc
-    scores each field independently — so the existing _bmw_range_topk
-    loop prunes soundly over the combined bound with (field|term) as the
+    scores each field independently — so the shared _bmw_range_topk loop
+    prunes soundly over the combined bound with (field, term) as the
     accumulation key. Survivor blocks decode lazily with their field's
     avgdl and boost applied at score time; docs never double-count
     because doc_id ranges align across fields (one shared doc_id space).
     """
-    empty = pd.DataFrame({"doc_id": [], "score": []}).astype(
-        {"doc_id": "int64", "score": "float64"}
-    )
-    rid = int(pdf["rid"].iloc[0])
-    dead: dict = {}
-    if "is_tomb" in pdf.columns:
-        tm = pdf["is_tomb"].to_numpy()
-        if tm.any():
-            trows = pdf[tm]
-            dead = {
-                (int(f), b): g["first_doc_id"].to_numpy().astype(np.int64)
-                for (f, b), g in trows.groupby(["field", "bid"])
-            }
-            pdf = pdf[~tm].reset_index(drop=True)
-    if pdf.empty:
-        return empty
-    row_bid = pdf["bid"].to_numpy() if "bid" in pdf.columns else None
-    row_field = pdf["field"].to_numpy().astype(np.int64)
-    row_term = pdf["term"].to_numpy()
-    # idf per (field, term): df is field-local (window-summed over that
-    # field's pruned blocks), N is the field's corpus size
-    ft = pdf[["field", "term", "df"]].drop_duplicates(["field", "term"])
-    # df clamped to the field's N — same deleted-docs-drift guard as
-    # _idf_map (a negative idf would zero the combined BM25F bound)
-    idf_by_ft = {
-        (int(f), t): float(
-            np.log(
-                1.0
-                + (metas[int(f)][0] - min(int(d), metas[int(f)][0]) + 0.5)
-                / (min(int(d), metas[int(f)][0]) + 0.5)
-            )
-        )
-        for f, t, d in zip(ft["field"], ft["term"], ft["df"])
-    }
-    lo, hi = rid * range_size, (rid + 1) * range_size
-    fd = pdf["first_doc_id"].to_numpy()
-    ld = pdf["last_doc_id"].to_numpy()
-    scale = pdf["scale"].to_numpy() if "scale" in pdf.columns else 1.0
-    idfs = np.asarray(
-        [idf_by_ft[(int(f), t)] for f, t in zip(row_field, row_term)],
-        dtype=np.float64,
-    )
-    boosts = np.asarray([metas[int(f)][2] for f in row_field], dtype=np.float64)
-    bms = pdf["block_max_tfnorm"].to_numpy() * idfs * scale * boosts
-    # composite accumulation key: the same term in two fields contributes
-    # twice to a doc's combined score, so the UB must sum per (field,term)
-    comp = np.char.add(
-        np.char.add(row_field.astype("U20"), "|"), row_term.astype("U")
-    )
-
-    decoded: dict[int, tuple[np.ndarray, np.ndarray]] = {}
-
-    def decode(i: int) -> tuple[np.ndarray, np.ndarray]:
-        if i not in decoded:
-            f = int(row_field[i])
-            _, avgdl_f, boost_f = metas[f]
-            ids = delta_decode_ids(pdf["doc_ids_varint"].iloc[i])
-            tfs = varint_decode(pdf["tfs_varint"].iloc[i]).astype(np.float64)
-            dls = varint_decode(pdf["dls_varint"].iloc[i]).astype(np.float64)
-            sc = _score_block(tfs, dls, idfs[i], avgdl_f) * boost_f
-            m = (ids >= lo) & (ids < hi)
-            if dead and row_bid is not None:
-                dd = dead.get((f, row_bid[i]))
-                if dd is not None and dd.size:
-                    m &= ~np.isin(ids, dd)
-            decoded[i] = (ids[m], sc[m])
-        return decoded[i]
-
-    d_out, s_out = _bmw_range_topk(
-        np.arange(len(pdf)), comp, fd, ld, bms, decode, k, lo, range_size, stride
-    )
-    if prune_stats is not None:
-        prune_stats["n_blocks_total"] = len(pdf)
-        prune_stats["n_blocks_decoded"] = len(decoded)
-    return pd.DataFrame({"doc_id": d_out, "score": s_out}).astype(
-        {"doc_id": "int64", "score": "float64"}
-    )
+    r = _open_range(pdf, range_size, stride, metas, by_field=True)
+    if r is None:
+        return _topk_frame([], [])
+    return _range_topk(r, k, prune_stats)
 
 
 def multifield_topk(
@@ -2750,14 +2461,9 @@ def multifield_topk(
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
-        return (
-            out.groupBy("doc_id")
-            .agg(F.sum("score").alias("score"))
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
+        summed = out.groupBy("doc_id").agg(F.sum("score").alias("score"))
+        return fields[0][0]._global_topk(summed, k)
 
-    spark = fields[0][0].spark
     metas: dict[int, tuple[int, float, float]] = {}
     # Fields bound to the SAME physical store (same out_dir + live builds —
     # e.g. one index queried under several boosts) share ONE block scan:
@@ -2780,23 +2486,13 @@ def multifield_topk(
         blocks = reader._blocks_for_terms(terms)
         if blocks is None:
             continue
-        rid = F.explode(
-            F.sequence(
-                (F.col("first_doc_id") / range_size).cast("long"),
-                (F.col("last_doc_id") / range_size).cast("long"),
-            )
-        ).alias("rid")
-        ranged = blocks.select("*", rid).withColumn("is_tomb", F.lit(False))
-        tomb = reader._tomb_ranged(range_size)
-        if tomb is not None:
-            ranged = ranged.unionByName(tomb, allowMissingColumns=True)
         parts.append(
-            ranged.withColumn(
+            reader._ranged(blocks, range_size).withColumn(
                 "field", F.explode(F.array(*[F.lit(fi) for fi in fis]))
             )
         )
     if not parts:
-        return spark.createDataFrame([], WAND_OUT_SCHEMA)
+        return fields[0][0].spark.createDataFrame([], WAND_OUT_SCHEMA)
     ranged = parts[0]
     for p in parts[1:]:
         ranged = ranged.unionByName(p, allowMissingColumns=True)
@@ -2804,8 +2500,7 @@ def multifield_topk(
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         return multifield_kernel(pdf, metas, k, range_size, stride)
 
-    local = ranged.groupBy("rid").applyInPandas(kernel, WAND_OUT_SCHEMA)
-    return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    return fields[0][0]._global_topk(_by_range(ranged, kernel), k)
 
 
 def multifield_topk_single(
@@ -2848,14 +2543,14 @@ def multifield_topk_single(
     unknown = sorted(set(names) - set(fstats))
     if unknown:
         raise ValueError(f"unknown fields {unknown}; store has {sorted(fstats)}")
-    spark = reader.spark
-    empty = spark.createDataFrame([], WAND_OUT_SCHEMA)
+    from ..sources.segments import FIELD_SEP
+
+    empty = reader.spark.createDataFrame([], WAND_OUT_SCHEMA)
     terms = sorted(set(tokenize_py(query)))
     if not terms or not fields:
         return empty
-    sep = ":"  # segments.FIELD_SEP; analyzed tokens are alnum-only
     all_terms = sorted(
-        {t if n == prim else f"{n}{sep}{t}" for n in names for t in terms}
+        {t if n == prim else f"{n}{FIELD_SEP}{t}" for n in names for t in terms}
     )
     blocks = reader._blocks_for_terms(all_terms)
     if blocks is None:
@@ -2865,33 +2560,21 @@ def multifield_topk_single(
         for fi, (n, boost) in enumerate(fields)
     }
     fname = F.when(
-        F.col("term").contains(sep), F.substring_index("term", sep, 1)
+        F.col("term").contains(FIELD_SEP), F.substring_index("term", FIELD_SEP, 1)
     ).otherwise(F.lit(prim))
     fidx = F.lit(None).cast("int")
     for fi, n in enumerate(names):
         fidx = F.when(fname == n, F.lit(fi)).otherwise(fidx)
     bare = F.when(
-        F.col("term").contains(sep),
-        F.expr(f"substring(term, instr(term, '{sep}') + 1)"),
+        F.col("term").contains(FIELD_SEP),
+        F.expr(f"substring(term, instr(term, '{FIELD_SEP}') + 1)"),
     ).otherwise(F.col("term"))
-    rid = F.explode(
-        F.sequence(
-            (F.col("first_doc_id") / range_size).cast("long"),
-            (F.col("last_doc_id") / range_size).cast("long"),
-        )
-    ).alias("rid")
-    ranged = (
-        blocks.select("*", rid)
-        .withColumn("is_tomb", F.lit(False))
-        .withColumn("field", fidx)
-        .withColumn("term", bare)
-    )
+    ranged = reader._ranged(blocks, range_size).withColumn("field", fidx).withColumn("term", bare)
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         return multifield_kernel(pdf, metas, k, range_size, stride)
 
-    local = ranged.groupBy("rid").applyInPandas(kernel, WAND_OUT_SCHEMA)
-    return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    return reader._global_topk(_by_range(ranged, kernel), k)
 
 
 register_by_value(__name__)

@@ -754,6 +754,110 @@ def test_bool_kernel_conjunctive_prune():
     assert stats["n_blocks_decoded"] <= 3, stats
 
 
+def _hand_range(tombs: bool, allow: bool) -> pd.DataFrame:
+    """One doc_id range of hand-built blocks in the shape of
+    test_bool_kernel_conjunctive_prune (a 'common' term over 50 blocks, a
+    'rare' one inside block 7) plus a 'mid' term, with tf and doc length
+    varying per doc so scores differ. `tombs` adds a second build that
+    overwrites three docs (and deletes one of them) as is_tomb rows;
+    `allow` adds a filter allow-list (every third doc below 30,000) as
+    is_filt rows."""
+    from ariadna_spark import B, K1
+    from ariadna_spark.functions.varint import delta_encode_ids, varint_encode
+
+    df = {"common": 6400, "mid": 500, "rare": 3}
+    rows = []
+
+    def block(term, ids, bid="b0"):
+        ids = np.asarray(ids, dtype=np.int64)
+        tfs = 1 + (ids * 7 + len(term)) % 5
+        dls = 50 + (ids * 13) % 100
+        tfn = tfs * (K1 + 1.0) / (tfs + K1 * (1.0 - B + B * dls / 100.0))
+        rows.append(
+            {
+                "rid": 0,
+                "bid": bid,
+                "term": term,
+                "df": df[term],
+                "first_doc_id": int(ids[0]),
+                "last_doc_id": int(ids[-1]),
+                "block_max_tfnorm": float(tfn.max()),
+                "doc_ids_varint": delta_encode_ids(ids),
+                "tfs_varint": varint_encode(tfs.astype(np.uint64)),
+                "dls_varint": varint_encode(dls.astype(np.uint64)),
+                "is_tomb": False,
+            }
+        )
+
+    for bi in range(50):
+        block("common", np.arange(bi * 1000, bi * 1000 + 128))
+    for bi in range(0, 50, 3):
+        block("mid", np.arange(bi * 1000 + 5, bi * 1000 + 120, 4))
+    block("rare", [7001, 7050, 7100])
+    if tombs:
+        block("common", [7001, 7050, 20003], bid="b1")
+        dead = [("b0", 7001), ("b0", 7050), ("b0", 20003), ("b1", 7050)]
+        rows += [
+            {"rid": 0, "bid": b, "first_doc_id": d, "last_doc_id": d, "is_tomb": True}
+            for b, d in dead
+        ]
+    pdf = pd.DataFrame(rows)
+    if allow:
+        pdf["is_filt"] = False
+        filt = pd.DataFrame(
+            {"rid": 0, "first_doc_id": np.arange(0, 30000, 3), "is_tomb": False, "is_filt": True}
+        )
+        pdf = pd.concat([pdf, filt], ignore_index=True)
+    return pdf
+
+
+@pytest.mark.parametrize(
+    "tombs,allow,after",
+    [
+        (False, False, False),
+        (True, False, False),
+        (True, True, False),
+        (True, False, True),
+        (True, True, True),
+    ],
+)
+def test_merged_wand_loop_special_cases(tombs, allow, after):
+    """The one stride loop behind every WAND kernel: (a) bool_kernel with
+    no must/must_not clause and msm=0 is wand_kernel bit for bit, rows and
+    prune_stats alike, with tombstone rows, filter rows and a search_after
+    cursor; (b) each query of a multiquery_kernel batch equals wand_kernel
+    run on that query's blocks alone over a tombstoned range (the batch
+    path carries no filter or cursor)."""
+    from ariadna_spark.operators.wand import bool_kernel, multiquery_kernel
+
+    n_docs, avgdl, rs = 100_000, 100.0, 64000
+    pdf = _hand_range(tombs, allow)
+    terms = ["common", "mid", "rare"]
+    cursor = None
+    if after:
+        first = wand_kernel(pdf, n_docs, avgdl, 4, rs)
+        cursor = (float(first["score"].iloc[-1]), int(first["doc_id"].iloc[-1]))
+    for k in (1, 5, 40):
+        want_st, got_st = {}, {}
+        want = wand_kernel(pdf, n_docs, avgdl, k, rs, prune_stats=want_st, after=cursor)
+        got = bool_kernel(
+            pdf, n_docs, avgdl, k, rs, [], terms, [], 0, prune_stats=got_st, after=cursor
+        )
+        assert len(want) == min(k, 40)
+        pd.testing.assert_frame_equal(got, want, check_exact=True)
+        assert got_st == want_st
+        if k == 1:  # the loop really prunes on this fixture
+            assert want_st["n_blocks_decoded"] < want_st["n_blocks_total"], want_st
+        if allow or after:
+            continue
+        per_q = {0: terms, 1: ["rare"], 2: ["common", "mid"], 3: ["mid"]}
+        many = multiquery_kernel(pdf, per_q, {q: k for q in per_q}, n_docs, avgdl, rs)
+        for q, ts in per_q.items():
+            alone = wand_kernel(pdf[pdf["term"].isin(ts) | pdf["is_tomb"]], n_docs, avgdl, k, rs)
+            mine = many.loc[many["query_id"] == q, ["doc_id", "score"]].reset_index(drop=True)
+            pd.testing.assert_frame_equal(mine, alone, check_exact=True)
+
+
 def test_match_aggs_values_and_single_pass(spark, docs, index_dir):
     """Range/histogram/stats/cardinality aggs match a brute-force pass
     over the corpus, and the grouping-sets exchange is REUSED across the

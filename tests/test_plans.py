@@ -6,7 +6,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from ariadna_spark.operators.wand import IndexReader
+from ariadna_spark.operators.wand import IndexReader, multifield_topk
 from ariadna_spark.plans import (
     assert_broadcast_join,
     assert_pushed_filter,
@@ -382,3 +382,51 @@ def test_bucket_files_term_sorted(spark, index_dir):
         assert len(files) == 1, (bd, files)
         terms = pq.read_table(files[0], columns=["term"])["term"].to_pylist()
         assert terms == sorted(terms), bd
+
+
+@pytest.fixture(scope="module")
+def tomb_dir(spark, docs, tmp_path_factory):
+    """A store with pending overwrite tombstones (every 11th doc re-ingested
+    into a second build), so each ranged plan carries the tombstone union."""
+    from ariadna_spark.sources.segments import append_segment
+
+    out = str(tmp_path_factory.mktemp("plans_tomb"))
+    build_index(spark, docs, out, build_id="t0", n_buckets=4)
+    batch = docs.filter(F.col("doc_id") % 11 == 0).withColumn(
+        "content", F.concat(F.col("content"), F.lit(" updated"))
+    )
+    append_segment(spark, batch, out, build_id="t1", n_buckets=4)
+    return out
+
+
+# verb -> (DataFrame factory, (Exchange count, FlatMapGroupsInPandas count)) on a
+# tombstoned store. Every scoring verb takes its ranged layout (rid explode,
+# tombstone and allow-list pseudo-rows) from IndexReader._ranged; the counts
+# pin the plan shape each verb must keep: one kernel stage behind the df
+# window and rid exchanges, plus one exchange for a filter's docmap side or
+# topk_many's per-query rank window.
+_VERB_PLANS = {
+    "topk": (lambda r: r.topk("merge join", 5), (2, 1)),
+    "topk_flt": (lambda r: r.topk("merge join", 5, flt=F.col("lang") == "fr"), (3, 1)),
+    "bool_topk_flt": (
+        lambda r: r.bool_topk("merge", "join", flt=F.col("lang") == "fr", k=5),
+        (3, 1),
+    ),
+    "phrase_topk": (lambda r: r.phrase_topk("merge join", 5), (2, 1)),
+    "near_topk": (lambda r: r.near_topk("merge join", 8, 5), (2, 1)),
+    "topk_many": (lambda r: r.topk_many([(0, "merge join", 5), (1, "window", 3)]), (3, 1)),
+    "scores": (lambda r: r.scores(["merge", "join"]), (2, 1)),
+    "multifield_topk": (
+        lambda r: multifield_topk([(r, 1.0), (r, 2.0)], "merge join", 5),
+        (2, 1),
+    ),
+}
+
+
+@pytest.mark.parametrize("verb", sorted(_VERB_PLANS))
+def test_scoring_verb_plan_shapes(spark, tomb_dir, verb):
+    reader = IndexReader(spark, tomb_dir)
+    assert reader.has_tombstones
+    make, want = _VERB_PLANS[verb]
+    plan = physical_plan(make(reader))
+    assert (plan.count("Exchange"), plan.count("FlatMapGroupsInPandas")) == want, plan
